@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from . import paths
 from .core import Shelf
-from .types import StepURI
 
 
 def path_to_snake(path: str) -> str:
@@ -76,20 +75,22 @@ def register_shelf_views(
     """Create a temp view per built table (+ alias views per policy).
     Returns {view_name: table_path}."""
     tables = built_tables(shelf)
-    views: dict[str, str] = {}
-    full_names = {t: path_to_snake(t) for t in tables}
-    for t, full in full_names.items():
-        # resolve(): the Spark JVM's cwd does not follow Python os.chdir
-        df = spark.read.parquet(str(paths.table_data_path(t).resolve()))
-        if names in ("full", "both"):
-            df.createOrReplaceTempView(full)
-            views[full] = t
+    aliases: dict[str, list[str]] = {}
     if names in ("short", "both"):
         for alias, full in table_aliases(tables).items():
-            t = next(p for p, f in full_names.items() if f == full)
-            df = spark.read.parquet(str(paths.table_data_path(t).resolve()))
-            df.createOrReplaceTempView(alias)
-            views[alias] = t
+            aliases.setdefault(full, []).append(alias)
+    views: dict[str, str] = {}
+    for t in tables:
+        full = path_to_snake(t)
+        view_names = [full] if names in ("full", "both") else []
+        view_names += aliases.get(full, [])
+        if not view_names:
+            continue
+        # resolve(): the Spark JVM's cwd does not follow Python os.chdir
+        df = spark.read.parquet(str(paths.table_data_path(t).resolve()))
+        for view in view_names:
+            df.createOrReplaceTempView(view)
+            views[view] = t
     return views
 
 

@@ -166,15 +166,17 @@ class Snapshot:
 
     def fetch(self) -> None:
         """Materialize from cache/store; no-op when already fresh."""
-        if self.is_up_to_date():
-            return
-        store = get_store()
         if self.snapshot_type == "file":
-            if not store.download(self.checksum, self.data_path):
+            if self.is_up_to_date():
+                return
+            if not get_store().download(self.checksum, self.data_path):
                 raise ValidationError(f"object {self.checksum[:12]}… not in store for {self.uri}")
             return
-        # directory: remove files not in the manifest, then fetch the rest
+        # directory: remove files not in the manifest, then fetch the
+        # missing or stale ones. The loop hashes each entry once, so an
+        # up-front is_up_to_date() would only hash them all twice.
         assert self.manifest is not None
+        store = get_store()
         if self.data_path.is_dir():
             for p in self.data_path.rglob("*"):
                 if p.is_file() and str(p.relative_to(self.data_path)) not in self.manifest:

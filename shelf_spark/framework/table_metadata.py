@@ -83,11 +83,7 @@ def generate_input_manifest(uri: StepURI, deps: list[StepURI]) -> Manifest:
         if cfg.exists():
             manifest[str(cfg)] = checksum_file(cfg)
     for dep in deps:
-        sidecar = (
-            paths.snapshot_metadata_path(dep.path)
-            if dep.scheme == "snapshot"
-            else paths.table_metadata_path(dep.path)
-        )
+        sidecar = paths.metadata_path(dep)
         manifest[str(sidecar)] = checksum_file(sidecar)
     return manifest
 
@@ -123,11 +119,7 @@ class TableMetadata:
             source = deps[0]
         if source is None:
             return {}
-        sidecar = (
-            paths.snapshot_metadata_path(source.path)
-            if source.scheme == "snapshot"
-            else paths.table_metadata_path(source.path)
-        )
+        sidecar = paths.metadata_path(source)
         if not sidecar.exists():
             return {}
         doc = load_yaml(sidecar) or {}

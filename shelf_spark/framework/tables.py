@@ -32,14 +32,16 @@ import sys
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..optimize import write_bucketed
+from ..sources import read_any
 from . import paths
 from .exceptions import StepDefinitionError
 from .snapshots import Snapshot
 from .types import StepURI
-from .utils import checksum_file, load_yaml
+from .utils import load_yaml
 from .table_metadata import TableMetadata, generate_input_manifest, load_config
 
 # ---------------------------------------------------------------------------
@@ -64,11 +66,6 @@ def find_script(uri: StepURI) -> Path:
             if cand.exists():
                 return cand
     raise StepDefinitionError(f"no build script found for {uri}")
-
-
-def config_path(uri: StepURI) -> Path:
-    """Optional per-dataset config sidecar next to the script."""
-    return find_script(uri).with_suffix(".meta.yaml")
 
 
 # ---------------------------------------------------------------------------
@@ -121,26 +118,31 @@ def simplify_dependency_names(deps: list[StepURI]) -> dict[str, StepURI]:
 # ---------------------------------------------------------------------------
 
 
-def logical_checksum(df: DataFrame) -> str:
-    """Order-insensitive content hash of a DataFrame + its schema.
-
-    sum over rows of the first 15 hex chars of
-    sha2(to_json(struct(*cols)), 256) (as a 60-bit int, exact in
-    decimal(38)), combined with the schema DDL and row count. Partition
-    order and row order cannot affect it, so Spark's nondeterministic
-    part-file layout doesn't break the Merkle dirty-check. One extra
-    aggregate job per build — distributed, no driver materialization.
-    """
-    import hashlib
-
-    cols = df.columns
-    row_hash = F.conv(
-        F.substring(F.sha2(F.to_json(F.struct(*[F.col(c) for c in cols])), 256), 1, 15),
+def _row_hash(df: DataFrame) -> Column:
+    """Per-row hash: the first 15 hex chars of
+    sha2(to_json(struct(*cols)), 256) as a 60-bit int, exact in
+    decimal(38) — so a sum over any number of rows cannot overflow or
+    round."""
+    return F.conv(
+        F.substring(F.sha2(F.to_json(F.struct(*[F.col(c) for c in df.columns])), 256), 1, 15),
         16,
         10,
     ).cast("decimal(38,0)")
+
+
+def logical_checksum(df: DataFrame) -> str:
+    """Order-insensitive content hash of a DataFrame + its schema.
+
+    The sum of :func:`_row_hash` over all rows, combined with the schema
+    DDL and row count. Partition order and row order cannot affect it, so
+    Spark's nondeterministic part-file layout doesn't break the Merkle
+    dirty-check. One extra aggregate job per build — distributed, no
+    driver materialization.
+    """
+    import hashlib
+
     agg = df.agg(
-        F.coalesce(F.sum(row_hash), F.lit(0)).alias("s"), F.count("*").alias("n")
+        F.coalesce(F.sum(_row_hash(df)), F.lit(0)).alias("s"), F.count("*").alias("n")
     ).collect()[0]
     basis = f"{df.schema.simpleString()}|{agg['n']}|{agg['s']}"
     return hashlib.sha256(basis.encode()).hexdigest()
@@ -225,23 +227,17 @@ def _dep_view_df(spark: SparkSession, dep: StepURI) -> DataFrame:
         cname = catalog_table_name(dep)
         if spark.catalog.tableExists(cname):
             return spark.table(cname)
-    return _read_any(spark, dependency_data_path(dep))
+    return read_any(spark, dependency_data_path(dep))
 
 
 def _partition_fingerprints(df: DataFrame, part_col: str) -> dict[str, str]:
     """Order-insensitive content fingerprint per partition value: the same
-    row-hash-sum construction as :func:`logical_checksum`, grouped by the
-    partition column — one distributed aggregate over the dep, no driver
+    row-hash sum as :func:`logical_checksum`, grouped by the partition
+    column — one distributed aggregate over the dep, no driver
     materialization beyond |partitions| rows."""
-    cols = df.columns
-    row_hash = F.conv(
-        F.substring(F.sha2(F.to_json(F.struct(*[F.col(c) for c in cols])), 256), 1, 15),
-        16,
-        10,
-    ).cast("decimal(38,0)")
     rows = (
         df.groupBy(F.col(part_col).cast("string").alias("_p"))
-        .agg(F.sum(row_hash).alias("s"), F.count("*").alias("n"))
+        .agg(F.sum(_row_hash(df)).alias("s"), F.count("*").alias("n"))
         .collect()
     )
     return {r["_p"]: f"{r['s']}|{r['n']}" for r in rows}
@@ -329,14 +325,16 @@ def _exec_sql_step(
             # exchanges (see shelf_spark/optimize.py for the sizing notes).
             # saveAsTable with an explicit path keeps the data external at
             # the step's normal output location.
-            writer = df.write.mode("overwrite").bucketBy(
-                bucketing["num_buckets"], *bucketing["keys"]
-            )
-            if bucketing.get("sort"):
-                writer = writer.sortBy(*bucketing["sort"])
             cname = catalog_table_name(uri)
             spark.sql(f"DROP TABLE IF EXISTS {cname}")
-            writer.format("parquet").option("path", str(out)).saveAsTable(cname)
+            write_bucketed(
+                df,
+                cname,
+                bucketing["keys"],
+                bucketing["num_buckets"],
+                sort_keys=bucketing.get("sort"),
+                path=str(out),
+            )
         elif incremental:
             part_col = incremental["partition_by"]
             if part_col not in df.columns:
@@ -365,18 +363,3 @@ def _exec_python_step(script: Path, deps: list[StepURI], out: Path) -> None:
     argv += [str(dependency_data_path(d).resolve()) for d in deps]
     argv.append(str(out.resolve()))
     subprocess.run(argv, check=True)
-
-
-def _read_any(spark: SparkSession, path: Path) -> DataFrame:
-    """Read a dependency: parquet tables, or csv/json/text snapshots."""
-    path = path.resolve()  # Spark JVM cwd does not follow Python os.chdir
-    suffix = path.suffix.lower()
-    if suffix == ".orc":
-        return spark.read.orc(str(path))
-    if suffix in {".parquet", ""} or path.is_dir():
-        return spark.read.parquet(str(path))
-    if suffix == ".csv":
-        return spark.read.csv(str(path), header=True, inferSchema=True)
-    if suffix in {".json", ".jsonl", ".ndjson"}:
-        return spark.read.json(str(path))
-    return spark.read.text(str(path))

@@ -39,23 +39,23 @@ _ITERS = 3
 _DEC8 = "decimal(20,8)"
 
 
-def _baskets(spark: SparkSession) -> DataFrame:
-    """Distinct (order, part) pairs — a part can recur across linenumbers."""
-    return spark.table("lineitem").select("l_orderkey", "l_partkey").distinct()
-
-
-def _basket_pairs(spark: SparkSession) -> DataFrame:
-    """(l_orderkey, p1, p2) co-occurrence pairs with p1 < p2, generated
-    map-side: ONE shuffle (groupBy order → sorted part set), then the
-    ≤B²/2 combinations per basket explode from the array without a
-    second shuffle — vs the naive self-join's extra join exchange.
-    B (basket size) is bounded small, so the explosion is linear overall.
-    """
-    baskets = (
+def _basket_part_sets(spark: SparkSession) -> DataFrame:
+    """(l_orderkey, parts): each order's sorted set of distinct parts — a
+    part can recur across linenumbers."""
+    return (
         spark.table("lineitem")
         .groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
     )
+
+
+def _pairs_of(baskets: DataFrame) -> DataFrame:
+    """(l_orderkey, p1, p2) co-occurrence pairs with p1 < p2 from the
+    sorted part sets of :func:`_basket_part_sets`, generated map-side: the
+    ≤B²/2 combinations per basket explode from the array without a
+    shuffle — vs the naive self-join's extra join exchange. B (basket
+    size) is bounded small, so the explosion is linear overall.
+    """
     combos = F.flatten(
         F.transform(
             "parts",
@@ -68,6 +68,12 @@ def _basket_pairs(spark: SparkSession) -> DataFrame:
     return baskets.select("l_orderkey", F.explode(combos).alias("pr")).select(
         "l_orderkey", "pr.p1", "pr.p2"
     )
+
+
+def _basket_pairs(spark: SparkSession) -> DataFrame:
+    """Co-occurrence pairs of :func:`_pairs_of` with ONE shuffle (groupBy
+    order → sorted part set)."""
+    return _pairs_of(_basket_part_sets(spark))
 
 
 def _directed_edges(und: DataFrame) -> DataFrame:
@@ -130,35 +136,17 @@ _SQL_PAIRS = """
 def mba_item_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket association pairs: top-20 co-occurring part pairs by
     support, with lift = P(p1,p2)/(P(p1)·P(p2)). Pair generation is the
-    single-shuffle array-combination shape (see _basket_pairs); per-item
+    single-shuffle array-combination shape (see _pairs_of); per-item
     counts are parts-sized (AQE broadcasts them while small); the
     total-orders scalar crossJoins."""
-    # ONE fact reduction (r15): pairs, per-item counts and the order
-    # count all derive from the same basket part-set relation — the
-    # former `_basket_pairs + 2x _baskets` shape ran the lineitem
-    # scan + distinct three times. item_cnt == per-part count of
+    # ONE fact reduction: pairs, per-item counts and the order count all
+    # derive from the same basket part-set relation, so lineitem is
+    # scanned once, not three times. item_cnt == per-part count of
     # distinct containing orders == explode of the per-order part sets;
     # n_orders == count of basket rows. EAGER pin: three concurrent
-    # consumers would race a lazy materialization (r15 audit shape).
-    baskets = (
-        spark.table("lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
-        .localCheckpoint(eager=True)
-    )
-    combos = F.flatten(
-        F.transform(
-            "parts",
-            lambda x, i: F.transform(
-                F.slice("parts", i + 2, F.size("parts")),
-                lambda y: F.struct(x.alias("p1"), y.alias("p2")),
-            ),
-        )
-    )
-    pairs = baskets.select("l_orderkey", F.explode(combos).alias("pr")).select(
-        "l_orderkey", "pr.p1", "pr.p2"
-    )
-    pair_cnt = pairs.groupBy("p1", "p2").agg(F.count("*").alias("support"))
+    # consumers would race a lazy materialization.
+    baskets = _basket_part_sets(spark).localCheckpoint(eager=True)
+    pair_cnt = _pairs_of(baskets).groupBy("p1", "p2").agg(F.count("*").alias("support"))
     item_cnt = (
         baskets.select(F.explode("parts").alias("l_partkey"))
         .groupBy("l_partkey")

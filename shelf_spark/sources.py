@@ -20,8 +20,8 @@ This module provides the Spark-native lake layout:
   directory layout; cap ``maxPartitionBytes`` so one task holds a
   bounded number of blobs.
 - **Format readers** (`read_any`): csv/json/text/parquet with schema
-  inference for snapshot-style inputs (same dispatch as
-  ``framework/tables.py:_read_any``, exposed for query-layer use).
+  inference for snapshot-style inputs; framework SQL steps read their
+  dependencies through it.
 """
 
 from __future__ import annotations

@@ -138,7 +138,8 @@ def test_snapshot_roundtrip(workspace):
     assert loaded.data_path.read_text() == "x,y\n1,2\n3,4\n"
 
 
-def test_directory_snapshot_roundtrip(workspace):
+def test_directory_snapshot_roundtrip(workspace, monkeypatch):
+    from shelf_spark.framework import snapshots, utils
     from shelf_spark.framework.snapshots import Snapshot
 
     d = workspace / "rawdir"
@@ -152,12 +153,55 @@ def test_directory_snapshot_roundtrip(workspace):
     # corrupt one file + add a stray; fetch restores manifest state
     (snap.data_path / "a.txt").write_text("corrupted")
     (snap.data_path / "stray.txt").write_text("stray")
+    b_mtime = (snap.data_path / "sub" / "b.txt").stat().st_mtime_ns
     loaded = Snapshot.load(StepURI.parse("snapshot://ns/dir/2024-01-01"))
     assert not loaded.is_up_to_date()
-    loaded.fetch()
+
+    # fetch hashes each manifest entry once and downloads only the stale one
+    hashed: list[str] = []
+    downloaded: list[str] = []
+    real_checksum = utils.checksum_file
+    store = snapshots.get_store()
+    real_download = store.download
+
+    def counting_checksum(path):
+        hashed.append(Path(path).name)
+        return real_checksum(path)
+
+    def recording_download(sha, dest):
+        downloaded.append(Path(dest).name)
+        return real_download(sha, dest)
+
+    store.download = recording_download
+    with monkeypatch.context() as m:
+        # checksum_folder looks the name up in utils; snapshots imported it by value
+        m.setattr(utils, "checksum_file", counting_checksum)
+        m.setattr(snapshots, "checksum_file", counting_checksum)
+        m.setattr(snapshots, "get_store", lambda: store)
+        loaded.fetch()
+    assert sorted(hashed) == ["a.txt", "b.txt"]
+    assert downloaded == ["a.txt"]
+    assert (loaded.data_path / "sub" / "b.txt").stat().st_mtime_ns == b_mtime
     assert loaded.is_up_to_date()
     assert (loaded.data_path / "a.txt").read_text() == "alpha"
     assert not (loaded.data_path / "stray.txt").exists()
+
+
+def test_logical_checksum_golden(spark):
+    """The logical checksum is the Merkle tree's table-side edge: its
+    exact bytes must not move, or every recorded sidecar turns stale."""
+    from shelf_spark.framework.tables import logical_checksum
+
+    df = spark.createDataFrame(
+        [(1, "a", 1.5), (2, "b", None), (3, None, -0.25)],
+        "id BIGINT, name STRING, x DOUBLE",
+    )
+    assert logical_checksum(df) == (
+        "391b33c1890590364743c542d9c5667de7e5d877f9602ff3dbd2f64a1f47047c"
+    )
+    assert logical_checksum(df.limit(0)) == (
+        "8ccca66245d55eb4a0ebf08c2175351c86c9a438774d3b0c9e62764633887327"
+    )
 
 
 def test_build_cycle_sql_step(workspace, spark):
@@ -459,12 +503,16 @@ def test_bucketed_table_steps_join_without_exchange(workspace, spark):
     spark.sql(f"DROP TABLE IF EXISTS {dim_name}")
 
 
-def test_db_query_and_export(workspace, spark, capsys):
+def test_db_query_and_export(workspace, spark, capsys, monkeypatch):
     """End-to-end export parity with the reference's test_export_duckdb
     (reference tests/test_shelf.py:361-400): build two tables, export to a
     real DuckDB file, read it back, and assert exact CONTENTS under both
     the fully-qualified default naming and ``--short`` aliases."""
-    from shelf_spark.framework.query import execute_query, export_tables
+    from shelf_spark.framework.query import (
+        execute_query,
+        export_tables,
+        register_shelf_views,
+    )
     from shelf_spark.framework.steps import execute_dag, prune_completed
     from shelf_spark.framework import paths
 
@@ -485,6 +533,29 @@ def test_db_query_and_export(workspace, spark, capsys):
     assert df.count() == 2
     out = capsys.readouterr().out
     assert '"a": 1' in out
+
+    # one parquet read per built table; the alias view shares it
+    from pyspark.sql import DataFrameReader
+
+    reads: list[str] = []
+    real_parquet = DataFrameReader.parquet
+
+    def counting_parquet(self, *paths_, **kw):
+        reads.extend(paths_)
+        return real_parquet(self, *paths_, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameReader, "parquet", counting_parquet)
+        views = register_shelf_views(spark, Shelf())
+    assert len(reads) == 2 and len(set(reads)) == 2
+    assert views == {
+        "ns_lit_20240101": "ns/lit/2024-01-01",
+        "lit": "ns/lit/2024-01-01",
+        "ns_pairs_20240102": "ns/pairs/2024-01-02",
+        "pairs": "ns/pairs/2024-01-02",
+    }
+    for alias, full in (("lit", "ns_lit_20240101"), ("pairs", "ns_pairs_20240102")):
+        assert sorted(spark.table(alias).collect()) == sorted(spark.table(full).collect())
 
     import duckdb
 
@@ -593,7 +664,14 @@ def test_incremental_partition_rebuild(workspace, spark):
     rows = {(r.day, r.total) for r in spark.read.parquet(str(out.resolve())).collect()}
     assert rows == {(1, 30), (2, 5)}
     sidecar = load_yaml(paths.table_metadata_path("ns/daily/2024-01-02"))
-    assert set(sidecar["partition_state"]) == {"1", "2"}
+    # golden sidecar bytes: a moved fingerprint would dirty every partition
+    assert sidecar["partition_state"] == {
+        "1": "1201821816143019795|2",
+        "2": "508482818227262972|1",
+    }
+    assert sidecar["checksum"] == (
+        "d256b13e26a4f2af6611460fa661942e5ea157f54ddcea8b82e2768ca26771a9"
+    )
 
     def part_files(day):
         d = out / f"day={day}"
@@ -620,7 +698,14 @@ def test_incremental_partition_rebuild(workspace, spark):
     # day 1 files are byte-identical and untouched on disk
     assert part_files(1) == day1_before
     sidecar = load_yaml(paths.table_metadata_path("ns/daily/2024-01-02"))
-    assert set(sidecar["partition_state"]) == {"1", "2", "3"}
+    assert sidecar["partition_state"] == {
+        "1": "1201821816143019795|2",
+        "2": "298889377023775522|1",
+        "3": "1127331887100872233|1",
+    }
+    assert sidecar["checksum"] == (
+        "b4019bf09851ec81ce26b0b704e280fbe25275318590a30d7efcad541ff91db2"
+    )
 
     # everything fresh again
     assert prune_completed(Shelf().resolve_latest()) == {}

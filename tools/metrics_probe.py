@@ -28,6 +28,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shlex
 import sys
 import tempfile
 import time
@@ -35,37 +36,24 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from shelf_spark.queries import QUERIES  # noqa: E402
-from shelf_spark.session import RUNTIME_CONFS, tune  # noqa: E402
+from shelf_spark.session import get_spark  # noqa: E402
 
 
 def _spark_with_eventlog(event_dir: str):
-    """get_spark()'s builder plus event logging (a static conf, so it
-    cannot be applied by tune() to an existing session)."""
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("shelf-spark-metrics-probe")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", f"file://{event_dir}")
+    """``get_spark()`` plus event logging. The event-log confs are static,
+    so they cannot be applied by tune() to an existing session; they ride
+    ``PYSPARK_SUBMIT_ARGS`` into the JVM that ``get_spark`` starts."""
+    confs = {
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": f"file://{event_dir}",
         # Spark 4 defaults to rolling zstd event logs; a single plain
         # JSON-lines file keeps the parser dependency-free.
-        .config("spark.eventLog.rolling.enabled", "false")
-        .config("spark.eventLog.compress", "false")
-        .config(
-            "spark.sql.warehouse.dir",
-            os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/shelf-spark-warehouse"),
-        )
-    )
-    for k, v in RUNTIME_CONFS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return tune(spark)
+        "spark.eventLog.rolling.enabled": "false",
+        "spark.eventLog.compress": "false",
+    }
+    submit = [arg for k, v in confs.items() for arg in ("--conf", f"{k}={v}")]
+    os.environ["PYSPARK_SUBMIT_ARGS"] = shlex.join(submit + ["pyspark-shell"])
+    return get_spark("shelf-spark-metrics-probe")
 
 
 def _noop(df) -> None:
@@ -75,14 +63,19 @@ def _noop(df) -> None:
 def parse_event_log(event_dir: str) -> dict[str, dict]:
     """Aggregate task metrics per job-description label.
 
-    Jobs carry the label in SparkListenerJobStart properties; tasks are
-    attributed to jobs via the job's stage-id set. A stage can be
-    shared/reused across jobs (AQE stage reuse) — attribute each task to
-    the job that registered its stage id first, which matches how the
-    work was actually scheduled.
+    Jobs carry the label in SparkListenerJobStart properties. A stage id
+    can be listed by several jobs (a later job lists an already computed
+    shuffle stage as a skipped parent; under AQE each query stage runs as
+    its own job), so a stage's tasks are credited to the job that
+    *submitted* it: when SparkListenerStageSubmitted arrives, the most
+    recently started job that is still running and lists the stage (the
+    DAG scheduler submits a job's missing stages in the same event-loop
+    turn that posts its JobStart).
     """
     per_label: dict[str, dict] = {}
-    stage_to_label: dict[int, str] = {}
+    running: dict[int, set[int]] = {}
+    job_label: dict[int, str] = {}
+    stage_label: dict[tuple[int, int], str] = {}
     paths = []
     for root, _dirs, files in os.walk(event_dir):
         paths.extend(os.path.join(root, f) for f in files)
@@ -95,17 +88,27 @@ def parse_event_log(event_dir: str) -> dict[str, dict]:
                     continue
                 kind = ev.get("Event")
                 if kind == "SparkListenerJobStart":
+                    job = ev["Job ID"]
+                    running[job] = set(ev.get("Stage IDs", []))
                     label = (ev.get("Properties") or {}).get(
                         "spark.job.description", ""
                     )
-                    if not label:
-                        continue
-                    for si in ev.get("Stage Infos", []):
-                        stage_to_label.setdefault(si["Stage ID"], label)
-                    agg = per_label.setdefault(label, _zero())
-                    agg["jobs"] += 1
+                    if label:
+                        job_label[job] = label
+                        per_label.setdefault(label, _zero())["jobs"] += 1
+                elif kind == "SparkListenerJobEnd":
+                    running.pop(ev["Job ID"], None)
+                elif kind == "SparkListenerStageSubmitted":
+                    info = ev["Stage Info"]
+                    sid = info["Stage ID"]
+                    listing = [j for j, stages in running.items() if sid in stages]
+                    label = job_label.get(max(listing)) if listing else None
+                    if label:
+                        stage_label[(sid, info.get("Stage Attempt ID", 0))] = label
                 elif kind == "SparkListenerTaskEnd":
-                    label = stage_to_label.get(ev.get("Stage ID"))
+                    label = stage_label.get(
+                        (ev.get("Stage ID"), ev.get("Stage Attempt ID", 0))
+                    )
                     if label is None:
                         continue
                     agg = per_label.setdefault(label, _zero())
