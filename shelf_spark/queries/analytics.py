@@ -15,6 +15,7 @@ from pyspark.sql.window import Window as W
 
 from .num import (_round_ieee, _sql_round_ieee, epoch_seconds_floor,
                   sane_ts, sql_sane_ts)
+from .pins import pin
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -871,7 +872,7 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     after runs on the K²-sized matrix relation (K = type catalog,
     bounded) with broadcast π each round — iterations never touch the
     fact table again. For an unbounded state space this becomes
-    PageRank's checkpointed-loop shape (graph.py)."""
+    PageRank's pinned-loop shape (graph.py)."""
     seq_w = W.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
         spark.table("events")
@@ -886,12 +887,8 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count("*").alias("n"))
     )
-    m = pairs.withColumn(
-        "nf", F.sum("n").over(W.partitionBy("from_type"))
-    # K²-sized; reused every iteration. EAGER (r15 lazy-pin audit): the
-    # states distinct + the driver count + iteration reads raced the
-    # lazy materialization (probe: wall 2.2-4.8 s lazy vs 1.3-1.5 s)
-    ).localCheckpoint(eager=True)
+    # K²-sized; read by the states count and by every iteration.
+    m = pin(pairs.withColumn("nf", F.sum("n").over(W.partitionBy("from_type"))), "shared")
     states = m.select(F.col("from_type").alias("state")).distinct()
     k = states.count()  # bounded type catalog (driver-side by design)
     if k == 0:
@@ -997,7 +994,8 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .prefix import attach_prefix_sums
 
     e = spark.table("events")
-    u = e.groupBy("user_id").agg(
+    # feeds three domain aggs + the score pass
+    u = pin(e.groupBy("user_id").agg(
         F.datediff(
             F.lit(_RFM_ANCHOR).cast("date"), F.max("ts").cast("date")
         ).alias("r"),
@@ -1005,7 +1003,7 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(
             F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
         ).alias("m"),
-    ).localCheckpoint(eager=False)  # feeds three domain aggs + the score pass
+    ), "first_use")
     n = u.agg(F.count("*").alias("n"))
 
     def bounds(metric: str):
@@ -1319,25 +1317,14 @@ def pref_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     join instead)."""
     li = spark.table("lineitem").select("l_orderkey", "l_partkey", "l_quantity")
     pt = spark.table("part").select("p_partkey", "p_brand")
-    # Pinned: both duel sides read this aggregate (without it the
-    # lineitem⋈part agg runs twice — the jaccard_pairs_exact rationale).
-    per_order = (
+    # Both sides of the duel self-join read this fact-sized aggregate.
+    per_order = pin(
         li.join(pt, li.l_partkey == pt.p_partkey)
         .groupBy("l_orderkey", "p_brand")
         .agg(
             F.sum(F.round(F.col("l_quantity") * 100).cast("long")).alias("q")
-        )
-        # EAGER (r14, measured twice): per_order is the one FACT-sized
-        # pin here and it feeds BOTH sides of the duel self-join. With
-        # eager=False the first materializing job schedules the two join
-        # branches concurrently, each computes this aggregate from
-        # scratch and they race on the block store ("Block rdd_N already
-        # exists" warnings) — event-log task metrics showed the lazy
-        # variant at ~11-14 s total executor CPU vs ~5.6-6 s eager, i.e.
-        # the duplicated fact aggregate costs far more than the one
-        # extra job submission. The K-/K²-row pins below stay lazy (their
-        # recompute is trivia; the barrier is the expensive part).
-        .localCheckpoint(eager=True)
+        ),
+        "shared",
     )
     a, b = per_order.alias("a"), per_order.alias("b")
     duel = a.join(
@@ -1346,21 +1333,10 @@ def pref_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("a.p_brand") != F.col("b.p_brand"))
         & (F.col("a.q") > F.col("b.q")),
     ).select(F.col("a.p_brand").alias("wb"), F.col("b.p_brand").alias("lb"))
-    # EAGER pin (r14): wmat is consumed THREE times downstream (both
-    # branches of m's union + wtot's join); unpinned, every consumption
-    # re-ran the duel self-join — the O(B²·orders) step. K²-bounded rows,
-    # so the pin itself is tiny; with per_order and wmat both eager the
-    # duel join runs exactly once per query.
-    wmat = (
-        duel.groupBy("wb", "lb")
-        .agg(F.count("*").alias("w"))
-        # coalesce(1) (r14): K²-bounded (≤625 rows) pinned as 32 mostly
-        # empty partitions otherwise — every MM-round stage then
-        # schedules 32 near-empty tasks.
-        .coalesce(1)
-        .localCheckpoint(eager=True)
-    )
-    m = (
+    # K²-bounded; read by both branches of m's union and by wtot's join,
+    # so the duel self-join (the O(B²·orders) step) runs once.
+    wmat = pin(duel.groupBy("wb", "lb").agg(F.count("*").alias("w")), "domain_shared")
+    m = pin(
         wmat.select(F.col("wb").alias("i"), F.col("lb").alias("j"), F.col("w").alias("n"))
         .unionAll(
             wmat.select(
@@ -1368,20 +1344,18 @@ def pref_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .groupBy("i", "j")
-        .agg(F.sum("n").cast("double").alias("n"))
-        .coalesce(1)
-        .localCheckpoint(eager=False)  # K²-bounded state, materialized once per run
+        .agg(F.sum("n").cast("double").alias("n")),
+        "domain_first_use",
     )
-    wtot = (
+    wtot = pin(
         m.join(
             wmat,
             (F.col("wb") == F.col("i")) & (F.col("lb") == F.col("j")),
             "left",
         )
         .groupBy(F.col("i").alias("brand"))
-        .agg(F.coalesce(F.sum("w"), F.lit(0)).cast("double").alias("wins"))
-        .coalesce(1)
-        .localCheckpoint(eager=False)
+        .agg(F.coalesce(F.sum("w"), F.lit(0)).cast("double").alias("wins")),
+        "domain_first_use",
     )
     # wins is K-bounded (≤25 brands) — collect once into a literal map so
     # each MM round is ONE K-keyed aggregate (the Markov `states.count()`
@@ -1423,15 +1397,9 @@ def pref_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "brand",
                 F.round(wins_map[F.col("brand")] / F.col("den"), 9).alias("p"),
             )
-            # NOT pinned per round (r14): p does feed the next round
-            # twice (pi + pj) so the K-row round subtree appears 2^3·2
-            # times in the plan — but every copy is a tiny K-row
-            # broadcast build that the runtime dedups, and a per-round
-            # localCheckpoint measured SLOWER (3.43 → 3.86 s median):
-            # the pin barrier costs more than the duplicated K-row
-            # work. Contrast events_markov_attribution, where the
-            # duplicated subtree held K²-sized aggregates and pinning
-            # won.
+            # Not pinned per round: p feeds the next round twice, but
+            # each copy is a K-row broadcast build, cheaper than a pin
+            # barrier (a per-round pin measured slower).
         )
     s = p.agg(
         F.sum(F.round("p", 9).cast("decimal(28,9)")).cast("double").alias("s")
@@ -1636,7 +1604,8 @@ def events_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    probs = (
+    # K²-bounded; every variant/hop reads this
+    probs = pin(
         trans.groupBy("src", "dst")
         .agg(F.count("*").alias("n"))
         .withColumn(
@@ -1647,38 +1616,27 @@ def events_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 12,
             ),
         )
-        .select("src", "dst", "p")
-        # coalesce(1) (r14): the window exchange above leaves 32 mostly
-        # empty partitions; pinned that way, every hop stage below
-        # schedules 32 near-empty tasks (330 tasks/run measured). The
-        # relation is K²-bounded by the state domain, so one partition
-        # is the scale-correct layout at any corpus size.
-        .coalesce(1)
-        .localCheckpoint(eager=False)  # K²-bounded; every variant/hop reads this
+        .select("src", "dst", "p"),
+        "domain_first_use",
     )
     channels = probs.filter(F.col("src") != _MRA_START).select(
         F.col("src").alias("ch")
     ).distinct()
-    variants = (
+    variants = pin(
         spark.range(1)
         .select(F.lit("__FULL__").alias("variant"))
-        .unionAll(channels.select(F.col("ch").alias("variant")))
-        .coalesce(1)
-        .localCheckpoint(eager=False)
+        .unionAll(channels.select(F.col("ch").alias("variant"))),
+        "domain_first_use",
     )
-    edges_all = (
+    # K²·K-bounded; every hop of the loop below reads it
+    edges_all = pin(
         probs.crossJoin(F.broadcast(variants))
         .filter(
             (F.col("variant") == "__FULL__")
             | ((F.col("src") != F.col("variant")) & (F.col("dst") != F.col("variant")))
         )
-        .select("variant", "src", "dst", "p")
-        # lazy (r10): the hop loop references this K-times inside ONE
-        # final job — first touch materializes, later hops read cache;
-        # the eager pin was a whole extra job of pure submission cost.
-        # coalesce(1) (r14): K²·K-bounded rows; see probs above.
-        .coalesce(1)
-        .localCheckpoint(eager=False)
+        .select("variant", "src", "dst", "p"),
+        "domain_first_use",
     )
     conv_rows = variants.select(
         "variant", F.lit(_MRA_CONV).alias("state"), F.lit(1.0).alias("v")
@@ -1698,19 +1656,14 @@ def events_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .unionAll(conv_rows)
         )
-    # Pin the end of the 8-hop chain (r14): `starts` is consumed twice
-    # (pf + the channels join) and `res` twice more (tot + the final
-    # select), so unpinned the whole value-iteration lineage appeared
-    # up to 4x in the plan — 417 nodes / 38 Exchange / 32 broadcast
-    # joins (= 8 hops x 4). Both pins are K-row relations; lazy, so
-    # they materialize inside the one final job.
-    starts = v.filter(F.col("state") == _MRA_START).localCheckpoint(
-        eager=False
-    )
+    # Pin the end of the hop chain, else its lineage appears once per
+    # consumer. Accepted race: pf and the channels join read `starts` in
+    # one job, as tot and the final select read `res`; both are K rows.
+    starts = pin(v.filter(F.col("state") == _MRA_START), "first_use")
     pf = starts.filter(F.col("variant") == "__FULL__").select(
         F.col("v").alias("pfull")
     )
-    res = (
+    res = pin(
         channels.join(
             starts.select(F.col("variant").alias("ch"), "v"), "ch", "left"
         )
@@ -1724,8 +1677,8 @@ def events_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(
                 1.0 - F.try_divide(F.col("conv_without"), F.col("pfull")), 9
             ),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        "first_use",
     )
     tot = res.agg(
         F.sum(F.round("removal_effect", 9).cast("decimal(28,9)"))
@@ -2013,14 +1966,12 @@ def er_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cents", (F.col("t_upto") - F.col("t")).alias("base")
     )
     wtie = W.partitionBy("cents").orderBy("c_custkey")
-    r = (
+    # both sides of the window-pair probe join read this
+    r = pin(
         c.join(base, "cents")
         .withColumn("rk", F.col("base") + F.row_number().over(wtie))
-        .select("c_custkey", "c_nationkey", "cents", "rk")
-        # EAGER (r15 lazy-pin audit): the window-pair probe consumes
-        # this on multiple branches; the lazy pin raced (probe: wall
-        # 1.9-2.5 s lazy vs 1.6-1.8 s eager)
-        .localCheckpoint(eager=True)
+        .select("c_custkey", "c_nationkey", "cents", "rk"),
+        "shared",
     )
     probe = r.select(
         F.col("c_custkey").alias("key_a"),
@@ -2443,7 +2394,7 @@ def pipeline_entity_resolution_e2e(spark: SparkSession, sf_dir: str) -> DataFram
     # no rnk+1 partner before. Measured 4.5 → 3.7 s at sf0.1 (the
     # star-contraction tail dominates what remains); pairs-subtree
     # plan: 3 Exchange / 1 SortMergeJoin → 1 / 0 (the full-query
-    # explain truncates at star_components' checkpoints, so the
+    # explain truncates at star_components' pins, so the
     # committed evidence is plans/r14/…_pairs_{before,after}.txt).
     pairs = (
         r.select(

@@ -20,7 +20,7 @@ Scale notes (100 TB):
   l_orderkey key.
 - The item graph is parts-sized (≪ facts); PageRank's per-iteration
   join+agg shuffles edges on src/dst only. 3 fixed iterations keep plan
-  depth bounded; an open-ended variant would localCheckpoint per round
+  depth bounded; an open-ended variant would pin each round
   like dedup_near_dup_clusters (sampling.py).
 """
 
@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .num import _round_ieee, _sql_round_ieee
+from .pins import pin
 from .registry import query
 
 #: PageRank constants.
@@ -79,11 +80,10 @@ def _basket_pairs(spark: SparkSession) -> DataFrame:
 def _directed_edges(und: DataFrame) -> DataFrame:
     """Both edge directions in ONE scan of the canonical (p1<p2) pairs.
 
-    r14: the former ``und.select(p1,p2).union(und.select(p2,p1))`` read
-    the und checkpoint blocks TWICE per consumer — per-job event metrics
-    showed every PageRank iteration reading 4x the und block bytes and
-    every BFS level paying the same double scan. The explode emits the
-    identical directed multiset from a single pass over the blocks.
+    A ``und.select(p1,p2).union(und.select(p2,p1))`` would read the
+    pinned und blocks TWICE per consumer (every PageRank iteration and
+    every BFS level). The explode emits the identical directed multiset
+    from a single pass over the blocks.
     """
     return und.select(
         F.explode(
@@ -143,9 +143,8 @@ def mba_item_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # derive from the same basket part-set relation, so lineitem is
     # scanned once, not three times. item_cnt == per-part count of
     # distinct containing orders == explode of the per-order part sets;
-    # n_orders == count of basket rows. EAGER pin: three concurrent
-    # consumers would race a lazy materialization.
-    baskets = _basket_part_sets(spark).localCheckpoint(eager=True)
+    # n_orders == count of basket rows.
+    baskets = pin(_basket_part_sets(spark), "shared")
     pair_cnt = _pairs_of(baskets).groupBy("p1", "p2").agg(F.count("*").alias("support"))
     item_cnt = (
         baskets.select(F.explode("parts").alias("l_partkey"))
@@ -236,17 +235,10 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     out-degree cap, so no single row or hash bucket can blow up on a
     power-law hub at 100 TB. Rewrote the r6 wedge-join plan 17.2 → 6.2 s at sf0.1,
     bit-identical output (DuckDB oracle: 16.9 s on the same machine)."""
-    und = _basket_pairs(spark).select("p1", "p2").distinct()
     # One materialization feeds degrees AND the orientation join.
-    # Lazy (r14): the eager pin was a whole separate job before the
-    # real work; eager=False keeps the truncation + single
-    # materialization inside the one final job (3.69 -> 3.37 s median;
-    # pinning adj too measured neutral — ReusedExchange already dedups
-    # the two adjacency consumers here).
-    und = und.localCheckpoint(eager=False)
+    und = pin(_basket_pairs(spark).select("p1", "p2").distinct(), "first_use")
     deg = (
-        # Both endpoints from one scan of the pinned pairs (r14): the
-        # union-of-two-selects read the und checkpoint blocks twice.
+        # Both endpoints from one scan of the pinned pairs.
         und.select(F.explode(F.array("p1", "p2")).alias("node"))
         .groupBy("node")
         .agg(F.count("*").alias("d"))
@@ -374,14 +366,14 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     agreement. The undirected graph guarantees every node receives mass,
     so the inner join loses no nodes."""
     pairs = _basket_pairs(spark).select("p1", "p2")
-    # localCheckpoint the CANONICAL (p1<p2) pairs — half the rows of the
+    # Pin the CANONICAL (p1<p2) pairs — half the rows of the
     # full edge list; the reversed copy is disjoint by construction, so
     # the union needs no second dedup and both directions read the same
     # materialized scan. Without the pin every consumer re-derives the
     # whole basket pipeline and the per-iteration plan grows into a tower.
-    und = pairs.distinct().localCheckpoint(eager=False)
+    und = pin(pairs.distinct(), "first_use")
     edges = _directed_edges(und)
-    # The degree table is NODE-sized (parts ≪ edges) — pin it eagerly
+    # The degree table is NODE-sized (parts ≪ edges) — pin it
     # (one groupBy over the pinned pairs) and from here on nothing
     # node-sized is ever shuffled: each iteration probes a broadcast of
     # (node, r, outdeg), so the only per-iteration shuffle is the
@@ -391,7 +383,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # millions of rows, tens of MB); past that, fall back to shuffle
     # joins with edges pre-partitioned by src so all iterations reuse
     # one exchange.
-    deg = edges.groupBy("src").agg(F.count("*").alias("outdeg")).localCheckpoint(eager=False)
+    deg = pin(edges.groupBy("src").agg(F.count("*").alias("outdeg")), "first_use")
     nn = deg.agg(F.count("*").alias("n"))
     ranks = deg.crossJoin(F.broadcast(nn)).select(
         F.col("src").alias("node"),
@@ -495,10 +487,9 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation fits, hash at scale), then ONE map-side-combined moment
     aggregate produces six numbers. No windows, no sorts; the same
     single-pass shape at any edge count."""
-    und = _basket_pairs(spark).select("p1", "p2").distinct().localCheckpoint(eager=False)
-    # Single-scan endpoint/direction expansion (r14, the _directed_edges
-    # rationale): each former unionAll-of-selects read the pinned und
-    # blocks twice.
+    und = pin(_basket_pairs(spark).select("p1", "p2").distinct(), "first_use")
+    # Single-scan endpoint/direction expansion (the _directed_edges
+    # rationale): a unionAll of selects would read the pinned und twice.
     deg = (
         und.select(F.explode(F.array("p1", "p2")).alias("node"))
         .groupBy("node")
@@ -718,7 +709,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: each round is one degree aggregate over the current edge
     set plus two semi-join-shaped filters against the parts-sized keep
     list (AQE broadcasts it when it fits) — edges only ever shrink,
-    and each round's edge set is checkpoint-pinned so the fixed-depth
+    and each round's edge set is pinned so the fixed-depth
     lineage never re-derives the basket join. An open-ended variant
     loops until a round removes nothing (the dedup_near_dup_clusters
     loop idiom); O(max-core) rounds bound it."""
@@ -729,10 +720,9 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c") >= _KCORE_MIN_SUPPORT)
         .select("p1", "p2")
     )
-    e = (
-        # Single scan for both directions (r14, the _directed_edges
-        # rationale): the union-of-two-selects evaluated the unpinned
-        # supp aggregate twice before the pin.
+    # Single scan for both directions (the _directed_edges rationale);
+    # peeling rounds re-read this, never the basket join.
+    e = pin(
         supp.select(
             F.explode(
                 F.array(
@@ -742,10 +732,8 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("e")
         )
         .select("e.src", "e.dst")
-        .distinct()
-        # peeling rounds re-read this, never the basket join; lazy —
-        # the bounded round count keeps the single final job flat (r10)
-        .localCheckpoint(eager=False)
+        .distinct(),
+        "first_use",
     )
     for _ in range(_KCORE_ROUNDS):
         keep = (
@@ -754,11 +742,11 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("d") >= _KCORE_K)
             .select("src")
         )
-        e = (
+        e = pin(
             e.join(keep, "src")
             .join(keep.select(F.col("src").alias("dst")), "dst")
-            .select("src", "dst")
-            .localCheckpoint(eager=False)
+            .select("src", "dst"),
+            "first_use",
         )
     return (
         e.groupBy(F.col("src").alias("item"))
@@ -961,29 +949,24 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     in DECIMAL (order-free), and re-rounds the normalized result — the
     same iteration-stable bitwise contract as graph_pagerank.
 
-    Scale shape: the edge list is pinned once (localCheckpoint); each
+    Scale shape: the edge list is pinned once; each
     half-step is one broadcast of the NODE-sized value table against
     the edges plus a map-side-combined groupBy — no node-sized shuffle,
     no edge re-derivation per iteration. Past broadcastable catalogs,
     pre-partition edges by the probe key and every iteration reuses
     that single exchange (the PageRank fallback note applies verbatim)."""
     pairs = _basket_pairs(spark).select("p1", "p2")
-    edges = (
-        pairs.distinct()
-        .select(F.col("p1").alias("src"), F.col("p2").alias("dst"))
-        # lazy: the first push materializes it; later pushes read cache
-        .localCheckpoint(eager=False)
+    edges = pin(
+        pairs.distinct().select(F.col("p1").alias("src"), F.col("p2").alias("dst")),
+        "first_use",
     )
 
     def _norm(raw: DataFrame) -> DataFrame:
         # Pin the NODE-sized raw table before referencing it twice (the
         # L1 total and the scale-back both consume it). Without the pin
-        # each half-step's plan contained its input's plan TWICE (sum +
-        # crossJoin), so the 3-deep push nesting re-evaluated the first
-        # authority pass up to 2^3 times — 66 Exchange / 22 BNLJ in the
-        # r14 before-plan, collapsed to a linear chain by pinning
-        # (lazy: all pins materialize inside the one final job).
-        raw = raw.localCheckpoint(eager=False)
+        # each half-step's plan contains its input's plan TWICE, so the
+        # 3-deep push nesting would re-evaluate the first pass up to 2^3 times.
+        raw = pin(raw, "first_use")
         tot = raw.agg(F.sum("raw").alias("s"))
         return raw.crossJoin(F.broadcast(tot)).select(
             "node",
@@ -1083,24 +1066,19 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     one hash join (edges ⋈ frontier on src; the frontier is node-sized
     and AQE broadcasts it while small, exactly BFS's natural skew) plus
     one DISTINCT and one LEFT ANTI join against the visited set. Every
-    frontier is pinned (localCheckpoint) so the plan stays FLAT — depth
+    frontier is pinned so the plan stays FLAT — depth
     iterations, not a 2^depth lineage tower — and the visited set is
     re-pinned per level for the same reason. Bounded depth = bounded
     rounds; nothing is ever node²."""
-    # Lazy checkpoints (r10): every pin below used to be an EAGER
-    # localCheckpoint — one separate job submission per level, and the
-    # per-job overhead dominated this query's wall at sf0.1 (the data
-    # work is tiny). eager=False keeps the identical lineage truncation
-    # and single materialization (the level DAG references each pin
-    # once; the final action computes and caches them in dependency
-    # order) but collapses the whole traversal into ONE job.
+    # The level DAG references each pin once, so the whole traversal
+    # is ONE job that builds the pins in dependency order.
     pairs = _basket_pairs(spark).select("p1", "p2")
-    und = pairs.distinct().localCheckpoint(eager=False)
+    und = pin(pairs.distinct(), "first_use")
     edges = _directed_edges(und)
     root = edges.agg(F.min("src").alias("node"))
-    frontier = root.localCheckpoint(eager=False)
+    frontier = pin(root, "first_use")
     # visited = union of the ALREADY-PINNED frontiers: each is a
-    # checkpoint scan, so the anti-join input stays flat without
+    # pinned scan, so the anti-join input stays flat without
     # re-materializing the growing set every level.
     pinned = [frontier]
     levels = [frontier.select(F.lit(0).alias("distance"), "node")]
@@ -1108,23 +1086,16 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
         visited = pinned[0]
         for p in pinned[1:]:
             visited = visited.unionAll(p)
-        # Anti BEFORE distinct (r14, guide §2.3 "project/filter before
-        # the exchange"): the broadcast anti-join is map-side, so
-        # running it first means the distinct's exchange carries only
-        # NEW nodes instead of every candidate dst (at sf0.1 the d=2
-        # frontier is 10.8k of 20k nodes — half the candidates are
-        # already visited). The broadcast hint ships the visited set,
-        # bounded by the node set — the same object the frontier join
-        # above already ships per level (AQE broadcasts it), and the
-        # repo's standing node-sized-broadcast idiom (graph_hits
-        # pushes, kmeans centroids). Measured 5.27 → 3.99 s median
-        # (reorder alone, unhinted: 4.63 s).
-        nxt = (
+        # Anti BEFORE distinct: the broadcast anti-join is map-side, so
+        # the distinct's exchange carries only NEW nodes instead of every
+        # candidate dst. The broadcast visited set is bounded by the node
+        # set, like the frontier the join above ships per level.
+        nxt = pin(
             edges.join(frontier.withColumnRenamed("node", "src"), "src")
             .select(F.col("dst").alias("node"))
             .join(F.broadcast(visited), "node", "left_anti")
-            .distinct()
-            .localCheckpoint(eager=False)
+            .distinct(),
+            "first_use",
         )
         levels.append(nxt.select(F.lit(d).alias("distance"), "node"))
         pinned.append(nxt)
@@ -1195,17 +1166,13 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     wedge denominator is a closed-form sum over the NODE-sized degree
     table — no wedge enumeration ever happens. Exact integer carriers,
     one IEEE division."""
-    # Lazy pins (r14): the two eager localCheckpoints were one job
-    # submission EACH before the real work started; eager=False keeps
-    # the identical lineage truncation and single materialization but
-    # runs everything inside the one final job. Measured with the adj
-    # pin below: 3.99 -> 3.44 s median at sf0.1.
     pairs = _basket_pairs(spark).select("p1", "p2")
-    und = pairs.distinct().localCheckpoint(eager=False)
+    und = pin(pairs.distinct(), "first_use")
     edges = _directed_edges(und)
-    deg = edges.groupBy(F.col("src").alias("node")).agg(
-        F.count("*").cast("long").alias("d")
-    ).localCheckpoint(eager=False)
+    deg = pin(
+        edges.groupBy(F.col("src").alias("node")).agg(F.count("*").cast("long").alias("d")),
+        "first_use",
+    )
     d1 = deg.select(F.col("node").alias("p1"), F.col("d").alias("d1"))
     d2 = deg.select(F.col("node").alias("p2"), F.col("d").alias("d2"))
     lower1 = (F.struct("d1", "p1") < F.struct("d2", "p2"))
@@ -1216,13 +1183,9 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(lower1, F.col("p2")).otherwise(F.col("p1")).alias("dst"),
         )
     )
-    # Pin the adjacency (r14): it feeds both the exploded fat side and
-    # the probe side of the wedge join; the pin guarantees one
-    # materialization instead of leaning on ReusedExchange through the
-    # two d1/d2 joins above.
-    adj = oriented.groupBy("src").agg(
-        F.collect_list("dst").alias("nbrs")
-    ).localCheckpoint(eager=False)
+    # Pin the adjacency: it feeds both the exploded fat side and the
+    # probe side of the wedge join.
+    adj = pin(oriented.groupBy("src").agg(F.collect_list("dst").alias("nbrs")), "first_use")
     fat = adj.select(
         F.col("src").alias("u"),
         F.col("nbrs").alias("nbrs_u"),
@@ -1314,20 +1277,20 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     comm = spark.table("part").select(
         F.col("p_partkey").alias("node"), F.col("p_brand").alias("c")
     )
-    edges = (
+    # consumed by m, a_in, and degs
+    edges = pin(
         und.join(comm.withColumnRenamed("c", "ca"), und.p1 == F.col("node"))
         .drop("node")
         .join(comm.withColumnRenamed("c", "cb"), und.p2 == F.col("node"))
-        .select("ca", "cb")
-        .localCheckpoint(eager=False)  # consumed by m, a_in, and the degree union
+        .select("ca", "cb"),
+        "first_use",
     )
     m = edges.agg(F.count("*").cast("long").alias("m"))
     a_in = edges.where(F.col("ca") == F.col("cb")).agg(
         F.count("*").cast("long").alias("a_in")
     )
     degs = (
-        # Single scan of the pinned edges (r14): unionAll read the
-        # checkpoint blocks twice.
+        # Single scan of the pinned edges.
         edges.select(F.explode(F.array("ca", "cb")).alias("c"))
         .groupBy("c")
         .agg(F.count("*").cast("decimal(19,0)").alias("d"))
@@ -1395,10 +1358,8 @@ def graph_knn_degree_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     built once, one degree aggregate, one dst-keyed join to carry
     degrees back, two bounded rollups; output is |distinct degrees|
     rows."""
-    # NOT pinned (r14): the 17 static Exchanges / 6 scans in the plan
-    # dedup at runtime via ReusedExchange; both eager and lazy
-    # localCheckpoint were measured SLOWER (2.2 → 3.4 s) because the
-    # cache materialization costs more than the reuse saves.
+    # Not pinned: the plan's Exchanges dedup at runtime via
+    # ReusedExchange, and both eager and lazy pins measured slower.
     und = _basket_pairs(spark).select("p1", "p2").distinct()
     # Single scan per consumer (r14): the unionAll evaluated the
     # unpinned und subtree twice per consumer (deg + nbrsum = 4 basket

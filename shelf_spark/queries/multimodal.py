@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from .num import _round_ieee, _sql_round_ieee
+from .pins import pin
 from .registry import query
 
 _DECODE_SCHEMA = (
@@ -386,18 +387,15 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(out)
 
     media = d.mapInPandas(encode_batches, schema="doc_id bigint, payload binary")
-    return media.mapInPandas(
+    decoded = media.mapInPandas(
         sample_batches,
         schema=(
             "doc_id bigint, frame_idx bigint, n_frames bigint, "
             "width bigint, height bigint, mean_pixel_ppm bigint"
         ),
-    # Pin before the presentation sort (r15): the range exchange's
-    # sampling pass recomputes its child, so the Python decode chain ran
-    # TWICE per query (two identical mapInPandas stages in the event
-    # log). The sampling job materializes the pin once; the real pass
-    # reads the cached doc-level (tiny) output.
-    ).localCheckpoint(eager=False).orderBy("doc_id", "frame_idx")
+    )
+    # Pinned before the sort, whose sampling pass would rerun the decode.
+    return pin(decoded, "first_use").orderBy("doc_id", "frame_idx")
 
 
 # ---------------------------------------------------------------------------
@@ -502,15 +500,15 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(out)
 
     media = d.mapInPandas(encode_batches, schema="doc_id bigint, payload binary")
-    return media.mapInPandas(
+    decoded = media.mapInPandas(
         feature_batches,
         schema=(
             "doc_id bigint, n_samples bigint, n_frames bigint, "
             "total_energy bigint, n_zero_crossings bigint, "
             "peak_frame_idx bigint, peak_frame_energy bigint"
         ),
-    # pin-before-sort: decode-once, see multimodal_frame_sample (r15)
-    ).localCheckpoint(eager=False).orderBy("doc_id")
+    )
+    return pin(decoded, "first_use").orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -648,11 +646,7 @@ def multimodal_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: see :func:`_ahash_signatures` — map-only; at 100 TB the
     encode stage is replaced by binaryFile splits; downstream grouping
     shuffles only the 8-byte signatures, never pixels."""
-    return (
-        _ahash_signatures(spark)
-        .localCheckpoint(eager=False)
-        .orderBy("doc_id")
-    )
+    return pin(_ahash_signatures(spark), "first_use").orderBy("doc_id")
 
 
 @query(
@@ -798,14 +792,14 @@ def multimodal_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(out)
 
     media = d.mapInPandas(encode_batches, schema="doc_id bigint, payload binary")
-    return media.mapInPandas(
+    decoded = media.mapInPandas(
         cuts_batches,
         schema=(
             "doc_id bigint, n_frames bigint, n_cuts bigint, "
             "total_abs_diff bigint"
         ),
-    # pin-before-sort: decode-once, see multimodal_frame_sample (r15)
-    ).localCheckpoint(eager=False).orderBy("doc_id")
+    )
+    return pin(decoded, "first_use").orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -934,14 +928,14 @@ def multimodal_audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame
             yield pd.DataFrame(out)
 
     media = d.mapInPandas(encode_batches, schema="doc_id bigint, payload binary")
-    return media.mapInPandas(
+    decoded = media.mapInPandas(
         vad_batches,
         schema=(
             "doc_id bigint, n_frames bigint, n_voiced bigint, "
             "n_segments bigint, longest_segment bigint"
         ),
-    # pin-before-sort: decode-once, see multimodal_frame_sample (r15)
-    ).localCheckpoint(eager=False).orderBy("doc_id")
+    )
+    return pin(decoded, "first_use").orderBy("doc_id")
 
 
 @query(
@@ -1049,11 +1043,11 @@ def multimodal_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(out)
 
     media = d.mapInPandas(encode_batches, schema="doc_id bigint, payload binary")
-    return media.mapInPandas(
+    decoded = media.mapInPandas(
         dhash_batches,
         schema="doc_id bigint, width bigint, height bigint, dhash string",
-    # pin-before-sort: decode-once, see multimodal_frame_sample (r15)
-    ).localCheckpoint(eager=False).orderBy("doc_id")
+    )
+    return pin(decoded, "first_use").orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .pins import pin
+
 #: Decimal carrier type: 8-decimal scale covers products of 2dp money
 #: columns (2dp × 2dp × 2dp = 6dp exact), 22 integer digits of headroom.
 DEC = "decimal(30,8)"
@@ -354,7 +356,9 @@ def grid_quantiles(stacked, probs: dict[str, float]):
         # 1-based rank — exactly one per (grp, m); w=0 rows can never cover
         return (F.col("cw") >= rank) & (F.col("cw") - F.col("w") < rank)
 
-    meta = c.groupBy("grp", "m").agg(
+    # meta feeds two consumers (refine targets + the group spine); a
+    # handful of rows, pinned so the histogram job runs once
+    meta = pin(c.groupBy("grp", "m").agg(
         F.max(F.when(covers(F.col("r_lo")), F.col("b"))).alias("b_lo"),
         F.max(
             F.when(covers(F.col("r_lo")), F.col("r_lo") - F.col("cw") + F.col("w"))
@@ -364,9 +368,7 @@ def grid_quantiles(stacked, probs: dict[str, float]):
             F.when(covers(F.col("r_hi")), F.col("r_hi") - F.col("cw") + F.col("w"))
         ).alias("want_hi"),
         F.max(F.col("h") - F.floor("h")).alias("frac"),
-    # meta feeds two consumers (refine targets + the group spine); a
-    # handful of rows, pinned so the histogram job runs once
-    ).localCheckpoint(eager=False)
+    ), "first_use")
     tgt = (
         meta.selectExpr(
             "grp AS t_grp",

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from .num import DEC, _round_ieee, _sql_round_ieee
+from .pins import pin
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -392,7 +393,7 @@ def vectors_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape per iteration: centroids are k×dim (broadcast), assignment
     is a map over the corpus (no shuffle of vectors), recentering is one
     k×dim-sized aggregate. A production loop would iterate to convergence
-    with localCheckpoint between rounds (see dedup_near_dup_clusters).
+    with a pin between rounds (see dedup_near_dup_clusters).
     """
     v = (
         spark.table("embeddings")
@@ -1434,7 +1435,8 @@ def text_collocation_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrs = spark.table("documents").select(
         "doc_id", F.split("text", " ").alias("arr")
     )
-    big = (
+    # feeds margins AND the scored join
+    big = pin(
         arrs.filter(F.size("arr") >= 2)
         .select(
             F.explode(
@@ -1449,8 +1451,8 @@ def text_collocation_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("bg.w1", "bg.w2")
         .groupBy("w1", "w2")
-        .agg(F.count("*").alias("c12"))
-        .localCheckpoint(eager=False)  # feeds margins AND the scored join
+        .agg(F.count("*").alias("c12")),
+        "first_use",
     )
     rowm = big.groupBy("w1").agg(F.sum("c12").alias("c1"))
     colm = big.groupBy("w2").agg(F.sum("c12").alias("c2"))
@@ -2428,9 +2430,8 @@ def text_kneser_ney_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "bg.w1", "bg.w2")
     )
-    big = pairs.groupBy("w1", "w2").agg(
-        F.count("*").cast("long").alias("c12")
-    ).localCheckpoint(eager=False)  # LM base relation: consumed by 4 rollups + join
+    # LM base relation: consumed by 4 rollups + join
+    big = pin(pairs.groupBy("w1", "w2").agg(F.count("*").cast("long").alias("c12")), "first_use")
     firsts = big.groupBy("w1").agg(
         F.sum("c12").cast("long").alias("c1"),
         F.count("*").cast("long").alias("nf"),

@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from .pins import pin
+
 
 def attach_prefix_sums(
     df: DataFrame,
@@ -64,17 +66,15 @@ def attach_prefix_sums(
         n_parts = max(1, df.sparkSession.sparkContext.defaultParallelism)
     # Pin the range-partitioned domain: repartitionByRange needs a
     # sampling pass to pick bounds, and the relation is consumed twice
-    # below (subtotals + final join) — without the checkpoint the whole
-    # upstream domain build executes three times (measured: the r7
-    # interval-overlap/quantile-bins replans cost ~2× their r6 walls
-    # until this landed). The checkpoint is distributed (per-partition
-    # executor blocks, never a driver collect), so it scales with the
-    # domain like every other exchange.
+    # below (subtotals + final join) — unpinned, the whole upstream
+    # domain build executes three times. The pin is distributed
+    # (per-partition executor blocks, never a driver collect), so it
+    # scales with the domain like every other exchange.
     base = df.repartitionByRange(
         n_parts, *[F.col(c) for c in order_cols]
     ).withColumn("__pid", F.spark_partition_id())
     if checkpoint:
-        base = base.localCheckpoint(eager=False)
+        base = pin(base, "first_use")
     subtotals = base.groupBy("__pid").agg(
         *[F.sum(c).alias(c) for c in value_cols]
     )

@@ -38,6 +38,7 @@ from pyspark.sql.window import Window as W
 
 from .dedup import JACCARD_THRESHOLD, jaccard_pairs_exact
 from .num import _round_ieee, _sql_round_ieee
+from .pins import pin
 from .registry import query
 
 #: 4-hex-digit prefix of sha256 compared against these bounds.
@@ -62,31 +63,22 @@ def star_components(pairs: DataFrame, a: str, b: str, max_rounds: int = 12) -> D
     """
     # Edges oriented larger→smaller; both star steps preserve that
     # orientation, so the fixpoint is a star per component whose center
-    # is the component minimum.
-    edges = (
+    # is the component minimum. The first round reads it on two branches
+    # (mins and large), and its upstream may be a whole Jaccard verify join.
+    edges = pin(
         pairs.where(F.col(a) != F.col(b))  # self-pairs carry no connectivity
         .select(
             F.greatest(F.col(a), F.col(b)).alias("u"),
             F.least(F.col(a), F.col(b)).alias("v"),
-        )
-        # EAGER (r14): the first round's materializing job consumes this
-        # on TWO branches at once (edges ∪ edges.swap inside bidir), so a
-        # lazy pin let both branches recompute the whole upstream pairs
-        # pipeline concurrently and race on the block store — for the
-        # dedup callers that upstream is the full Jaccard verify join
-        # (event-log metrics: dedup_keep_best_per_cluster ~25 s executor
-        # CPU lazy vs ~17 s eager). One extra job submission is far
-        # cheaper than a second run of the pairs pipeline.
-        .localCheckpoint(eager=True)
+        ),
+        "shared",
     )
     prev_sig = None
     for _ in range(max_rounds):
         # Large-star: over both directions, hook every neighbor larger
         # than u to m = min(N(u) ∪ {u}).  m ≤ u < v keeps (bigger, smaller).
-        # Both directions from ONE scan of the pinned edges (r15, the
-        # _directed_edges idiom): the union-of-two-selects read the
-        # checkpoint blocks twice per consumer, and bidir has two
-        # consumers below (mins + large) — 4 block reads per round -> 2.
+        # Both directions from ONE scan of the pinned edges (the
+        # _directed_edges idiom); bidir has two consumers (mins + large).
         bidir = edges.select(
             F.explode(
                 F.array(
@@ -116,12 +108,8 @@ def star_components(pairs: DataFrame, a: str, b: str, max_rounds: int = 12) -> D
             .union(mins2.select("u", F.col("m").alias("v")))
             .distinct()
         )
-        # Lazy localCheckpoint + the signature action right below: the
-        # convergence check is the job that materializes the round, so
-        # each round costs ONE job, not two (eager pin + sig). Lineage
-        # is still truncated — the plan stays one-round deep instead of
-        # doubling every iteration.
-        edges = small.localCheckpoint(eager=False)
+        # The signature below is the job that builds the round's pin.
+        edges = pin(small, "first_use")
         sig = tuple(edges.agg(F.count("*"), F.bit_xor(F.xxhash64("u", "v"))).first())
         if sig == prev_sig:
             break
@@ -813,7 +801,7 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-float center + a narrow map updating the running min-distance,
     followed by TakeOrderedAndProject (per-partition top-1, no global
     sort). Nothing shuffles; state is k vectors. The min-distance
-    column rides the corpus relation and is checkpoint-pinned per
+    column rides the corpus relation and is pinned per
     step, so lineage stays flat at any k."""
     v = spark.table("embeddings").select(
         "vec_id",
@@ -840,7 +828,7 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             c.select(F.lit(k).cast("long").alias("center_rank"), "vec_id", "md")
         )
         if k < _KC_K:
-            d = (
+            d = pin(
                 d.crossJoin(F.broadcast(c.select(F.col("vec").alias("cvec"))))
                 .select(
                     "vec_id",
@@ -848,8 +836,8 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.least(
                         F.col("md"), sqdist(F.col("vec"), F.col("cvec"))
                     ).alias("md"),
-                )
-                .localCheckpoint(eager=False)
+                ),
+                "first_use",
             )
     out = picks[0]
     for pk in picks[1:]:

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .num import _round_ieee, _sql_round_ieee, sql_dsum_i
+from .pins import pin
 from .registry import query
 
 
@@ -181,7 +182,7 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     replica graph.
 
     Scale shape: the edge relation is derived ONCE and pinned
-    (localCheckpoint) before entering the loop — Spark's UnionLoopExec
+    before entering the loop — Spark's UnionLoopExec
     re-evaluates non-recursive CTEs inside the loop body per
     iteration, so an unpinned edge derivation would re-run the basket
     join every hop (measured: 10.5 s → 2.6 s at sf0.1 from this pin
@@ -199,12 +200,9 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bound — the hop guard, not this valve, is the semantic limit.
     spark.conf.set("spark.sql.cteRecursionRowLimit", str(100_000_000))
     pairs = _support_edges(spark)
-    # Both directions in ONE evaluation of the support aggregate (r15,
-    # VERDICT r14 ask #2): the union-of-two-selects evaluated the
-    # unpinned _support_edges subtree once per branch — the same shape
-    # 56fe310 removed at ten graph.py sites; the explode derives the
-    # identical directed multiset map-side from a single pass.
-    edges = _directed_edges(pairs).localCheckpoint(eager=False)
+    # Both directions in ONE evaluation of the support aggregate (the
+    # _directed_edges idiom).
+    edges = pin(_directed_edges(pairs), "first_use")
     edges.createOrReplaceTempView("rcte_edges")
     return spark.sql(_RCTE_WALK_SQL)
 

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from .num import _round_ieee, _sql_round_ieee, sane_ts, sql_sane_ts
+from .pins import pin
 from .registry import query
 
 #: Exact decimal carriers for the moment sums: quantities are integral,
@@ -488,12 +489,11 @@ def ml_quantile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exact at any row count, so the Spark side must be too)."""
     li = spark.table("lineitem")
     # Pin the compressed domain: repartitionByRange's sampling pass would
-    # otherwise re-run the full fact aggregation a second time just to
-    # pick range bounds (measured 2.3 → 2.0 s at sf0.1; the win grows
-    # with fact volume since the checkpoint is domain-sized).
-    pc = li.groupBy(F.col("l_extendedprice").alias("price")).agg(
-        F.count("*").alias("cnt")
-    ).localCheckpoint(eager=False)
+    # otherwise re-run the full fact aggregation just to pick range bounds.
+    pc = pin(
+        li.groupBy(F.col("l_extendedprice").alias("price")).agg(F.count("*").alias("cnt")),
+        "first_use",
+    )
     from .prefix import attach_prefix_sums
 
     cum = attach_prefix_sums(pc, ["price"], ["cnt"]).select(
@@ -954,7 +954,8 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded calendar-day domain; the lag self-join and moment sums run
     entirely on that (days × lags)-sized relation — adding lags or
     years grows the domain, never re-scans facts."""
-    daily = (
+    # both lag-join sides read this
+    daily = pin(
         spark.table("events")
         .groupBy(F.to_date(F.date_trunc("day", "ts")).alias("day"))
         .agg(
@@ -970,12 +971,8 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
                 F.lit(0),
             ).alias("yi"),
-        )
-        # EAGER (r15 lazy-pin audit, VERDICT r14 ask #1): both lag-join
-        # sides raced the lazy materialization inside one job and each
-        # recomputed the fact reduction (probe: wall 3.3-3.6 s lazy vs
-        # 1.1-1.8 s eager, Σ task run 8.8-9.8 → ~7.2 s)
-        .localCheckpoint(eager=True)
+        ),
+        "shared",
     )
     # Build the lag grid from the tuple VALUES (not its length) so a
     # non-contiguous / non-zero-based _XCORR_LAGS stays in sync with the
@@ -1323,7 +1320,8 @@ def ts_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon (a decade ≈ 6.7M pairs — a flyweight relation), never by
     event volume. The slope-domain cumulative count is a
     constant-partition window over the compressed slope grid."""
-    daily = (
+    # both pair-join sides + the n_days count read this
+    daily = pin(
         spark.table("events")
         .filter(F.col("event_type") == "purchase")
         .groupBy(
@@ -1336,11 +1334,8 @@ def ts_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
             ).alias("yi")
-        )
-        # EAGER (r15 lazy-pin audit): both pair-join sides + the n_days
-        # count raced the lazy materialization (probe: wall never worse,
-        # 1.19-1.21 s lazy vs 0.87-1.16 s eager)
-        .localCheckpoint(eager=True)
+        ),
+        "shared",
     )
     a = daily.select(F.col("d").alias("di"), F.col("yi").alias("yi"))
     b = daily.select(F.col("d").alias("dj"), F.col("yi").alias("yj"))
@@ -1711,7 +1706,7 @@ def ml_lift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "score", "y", (-F.col("score")).alias("neg"), F.lit(1).alias("one")
     )
     rn = attach_prefix_sums(sc, ["neg", "doc_id"], ["one"])
-    # totals from RN (attach_prefix_sums' checkpointed relation keeps all
+    # totals from RN (attach_prefix_sums' pinned relation keeps all
     # of sc's columns) — aggregating raw `sc` would re-scan documents.
     tot = rn.groupBy().agg(
         F.count("*").alias("n"), F.count(F.when(F.col("y"), 1)).alias("p")
@@ -2064,7 +2059,7 @@ def ts_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("v"),
     ).withColumn("one", F.lit(1))
     cum = attach_prefix_sums(daily, ["day"], ["v", "one"])
-    # totals from CUM (attach_prefix_sums' checkpointed domain), not from
+    # totals from CUM (attach_prefix_sums' pinned domain), not from
     # `daily` — aggregating the raw relation would re-run the full events
     # scan+agg a second time per execution.
     tot = cum.groupBy().agg(F.sum("v").alias("t"), F.count("*").alias("n"))
@@ -2784,15 +2779,15 @@ def ml_linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle beyond the 1-row aggregates. A d-feature version is the
     same two passes with a d×d normal matrix solved driver-side
     (d²-bounded, the Markov/BT precedent)."""
-    g = spark.table("lineitem").select(
-        F.round(F.col("l_quantity") * 100).cast("long").alias("x1"),
-        F.round(F.col("l_discount") * 100).cast("long").alias("x2"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("y"),
-    # EAGER (r15 lazy-pin audit): the moments pass and the deviations
-    # pass raced the lazy materialization — the probe showed ~20
-    # lineitem-scans' worth of duplicate input and wall 2.2-4.4 s lazy
-    # vs 1.3-1.6 s eager
-    ).localCheckpoint(eager=True)
+    # the moments pass and the deviations pass both read this
+    g = pin(
+        spark.table("lineitem").select(
+            F.round(F.col("l_quantity") * 100).cast("long").alias("x1"),
+            F.round(F.col("l_discount") * 100).cast("long").alias("x2"),
+            F.round(F.col("l_extendedprice") * 100).cast("long").alias("y"),
+        ),
+        "shared",
+    )
     d38 = _ATTR_D38
     m = g.agg(
         F.count("*").alias("n"),
@@ -3854,6 +3849,20 @@ _SAX_SYM = (
 )
 
 
+def _daily_purchase_cents(spark: SparkSession) -> DataFrame:
+    """Purchase value per calendar day, in whole cents (half-up), unpinned."""
+    return (
+        spark.table("events")
+        .filter(F.col("event_type") == "purchase")
+        .groupBy(F.to_date(F.date_trunc("day", "ts")).alias("day"))
+        .agg(
+            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
+            .cast("long")
+            .alias("cents")
+        )
+    )
+
+
 @query(
     "ts_sax_symbols",
     oracle=f"""
@@ -3898,16 +3907,7 @@ def ts_sax_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer; each frame's z and its breakpoint comparisons are one
     fixed-shape IEEE expression — the symbol can only flip if the
     EXACT z crosses a breakpoint, identically on both engines."""
-    daily = (
-        spark.table("events")
-        .filter(F.col("event_type") == "purchase")
-        .groupBy(F.to_date(F.date_trunc("day", "ts")).alias("day"))
-        .agg(
-            F.sum(
-                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-            ).cast("long").alias("cents")
-        )
-    )
+    daily = _daily_purchase_cents(spark)
     d0 = daily.agg(F.min("day").alias("day0"))
     c38 = F.col("cents").cast("decimal(38,0)")
     mom = daily.agg(
@@ -4523,16 +4523,7 @@ def ts_fourier_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract as the MI/AP term sums; cos/sin last-ulp divergence
     between engines is absorbed by the grid exactly like ln/exp
     elsewhere)."""
-    daily = (
-        spark.table("events")
-        .filter(F.col("event_type") == "purchase")
-        .groupBy(F.to_date(F.date_trunc("day", "ts")).alias("day"))
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-            .cast("long")
-            .alias("cents")
-        )
-    )
+    daily = _daily_purchase_cents(spark)
     d0 = daily.agg(F.min("day").alias("day0"))
     mom = daily.agg(
         F.count("*").cast("long").alias("n"),
@@ -4750,7 +4741,8 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     the small domain, keeping the plan-audit invariant registry-wide."""
     from .prefix import attach_prefix_sums
 
-    daily = (
+    # the value-domain build, the n_days count and the signs pass read this
+    daily = pin(
         spark.table("events")
         # value IS NOT NULL: see oracle note
         .filter((F.col("event_type") == "purchase") & F.col("value").isNotNull())
@@ -4759,10 +4751,8 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
             .cast("long")
             .alias("cents")
-        )
-        # EAGER (r15 lazy-pin audit): the value-domain build, the n_days
-        # count and the signs pass raced the lazy materialization
-        .localCheckpoint(eager=True)
+        ),
+        "shared",
     )
     vdom = daily.groupBy("cents").agg(F.count("*").cast("long").alias("t"))
     vcum = attach_prefix_sums(vdom, ["cents"], ["t"])
@@ -4782,11 +4772,10 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ddom = signed.groupBy("day").agg(
         F.count("*").cast("long").alias("t"), F.max("s").alias("s")
     )
-    ranked = attach_prefix_sums(ddom, ["day"], ["t"]).select(
-        "s", F.col("t_upto").alias("rk")
-    # EAGER (r15): ranked and its shifted twin race the lazy pin inside
-    # the flips join (same audit as daily above)
-    ).localCheckpoint(eager=True)
+    # ranked and its shifted twin meet in the flips join
+    ranked = pin(
+        attach_prefix_sums(ddom, ["day"], ["t"]).select("s", F.col("t_upto").alias("rk")), "shared"
+    )
     nxt = ranked.select((F.col("rk") - 1).alias("rk"), F.col("s").alias("s2"))
     trans = (
         ranked.join(nxt, "rk")
@@ -5002,28 +4991,16 @@ def ts_control_chart_xmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     the violation predicate."""
     from .prefix import attach_prefix_sums
 
-    daily = (
-        spark.table("events")
-        .filter(F.col("event_type") == "purchase")
-        .groupBy(F.to_date(F.date_trunc("day", "ts")).alias("day"))
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-            .cast("long")
-            .alias("cents")
-        )
-        # EAGER (r15 lazy-pin audit): the moving-range chain, the moments
-        # agg and the violations pass raced the lazy materialization
-        # (probe: Σ task run 2.0-2.2 s lazy vs 1.0-1.6 s eager)
-        .localCheckpoint(eager=True)
-    )
+    # the moving-range chain, the moments agg and the violations pass read this
+    daily = pin(_daily_purchase_cents(spark), "shared")
     ddom = daily.groupBy("day").agg(
         F.count("*").cast("long").alias("t"), F.max("cents").alias("cents")
     )
-    ranked = attach_prefix_sums(ddom, ["day"], ["t"]).select(
-        F.col("t_upto").alias("rk"), "cents"
-    # EAGER (r15): ranked and its shifted twin race the lazy pin inside
-    # the moving-range join (same audit as daily above)
-    ).localCheckpoint(eager=True)
+    # ranked and its shifted twin meet in the moving-range join
+    ranked = pin(
+        attach_prefix_sums(ddom, ["day"], ["t"]).select(F.col("t_upto").alias("rk"), "cents"),
+        "shared",
+    )
     nxt = ranked.select((F.col("rk") - 1).alias("rk"), F.col("cents").alias("c2"))
     mrs = ranked.join(nxt, "rk").agg(
         F.count("*").cast("long").alias("nmr"),
@@ -5083,22 +5060,16 @@ def ts_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpartitioned lag window), exact integer comparisons."""
     from .prefix import attach_prefix_sums
 
-    daily = (
-        spark.table("events")
-        .filter(F.col("event_type") == "purchase")
-        .groupBy(F.to_date(F.date_trunc("day", "ts")).alias("day"))
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-            .cast("long")
-            .alias("cents")
-        )
-    )
+    daily = _daily_purchase_cents(spark)
     ddom = daily.groupBy("day").agg(
         F.count("*").cast("long").alias("t"), F.max("cents").alias("cents")
     )
-    ranked = attach_prefix_sums(ddom, ["day"], ["t"]).select(
-        "day", "cents", F.col("t_upto").alias("rk")
-    ).localCheckpoint(eager=False)
+    ranked = pin(
+        attach_prefix_sums(ddom, ["day"], ["t"]).select(
+            "day", "cents", F.col("t_upto").alias("rk")
+        ),
+        "first_use",
+    )
     prev = ranked.select((F.col("rk") + 1).alias("rk"), F.col("cents").alias("pc"))
     nxt = ranked.select((F.col("rk") - 1).alias("rk"), F.col("cents").alias("nc"))
     return (
@@ -5152,17 +5123,7 @@ def ts_snaive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     both aggregates are order-free exact sums with one final IEEE
     division each. Day-domain self-join on day−7 — calendar-
     bounded equi-join, facts touched once."""
-    daily = (
-        spark.table("events")
-        .filter(F.col("event_type") == "purchase")
-        .groupBy(F.to_date(F.date_trunc("day", "ts")).alias("day"))
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-            .cast("long")
-            .alias("cents")
-        )
-        .localCheckpoint(eager=False)
-    )
+    daily = pin(_daily_purchase_cents(spark), "first_use")
     fc = daily.select(F.date_add("day", 7).alias("day"), F.col("cents").alias("f"))
     joined = daily.join(fc, "day").select(
         F.col("cents").alias("actual"),
@@ -5530,10 +5491,9 @@ def stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long").alias("x"),
         F.floor(F.col("l_extendedprice") / 1000).cast("long").alias("y"),
     )
-    cells = (
-        f.groupBy("x", "y")
-        .agg(F.count("*").cast("decimal(19,0)").alias("cn"))
-        .localCheckpoint(eager=False)  # grid relation, consumed by 4 passes below
+    # grid relation, consumed by 4 passes below
+    cells = pin(
+        f.groupBy("x", "y").agg(F.count("*").cast("decimal(19,0)").alias("cn")), "first_use"
     )
     # The pair pass is a broadcast NESTED-LOOP join: its cost is
     # |probe partition| × |grid| predicate evaluations per task, and the
@@ -5638,18 +5598,16 @@ def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is ~6.6M pairs — constant in corpus size, linear in years).
     Tie groups come from one more domain-sized aggregate; Z is ONE
     shared IEEE expression over (n, S, u)."""
-    daily = (
+    # both sides of the S-statistic pair join, the tie groups and the count read this
+    daily = pin(
         spark.table("orders")
         .groupBy(F.col("o_orderdate").alias("day"))
         .agg(
             F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long"))
             .cast("decimal(18,0)")
             .alias("rev")
-        )
-        # EAGER (r15 lazy-pin audit): the S-statistic pair join (both
-        # sides), the tie groups and the count raced the lazy
-        # materialization (probe: wall 0.68-0.83 s lazy vs 0.57-0.62 s)
-        .localCheckpoint(eager=True)
+        ),
+        "shared",
     )
     a = daily.select(F.col("day").alias("day_a"), F.col("rev").alias("rev_a"))
     b = daily.select(F.col("day").alias("day_b"), F.col("rev").alias("rev_b"))
@@ -5748,15 +5706,16 @@ def ts_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB daily cents ~2.5e15 → n²·P ~1e41 would overflow, so the
     n² scaling happens in the final shared IEEE expression, never in
     decimal); r_k is that ONE expression on both engines."""
-    daily = (
+    # day domain, consumed by glob + both join sides
+    daily = pin(
         spark.table("orders")
         .groupBy(F.col("o_orderdate").alias("day"))
         .agg(
             F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long"))
             .cast("decimal(19,0)")
             .alias("rev")
-        )
-        .localCheckpoint(eager=False)  # day domain, consumed by glob + both join sides
+        ),
+        "first_use",
     )
     glob = daily.agg(
         F.count("*").cast("decimal(19,0)").alias("n"),
@@ -6206,15 +6165,15 @@ def ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     n(n+2) scaling is one more shared expression. Scale shape:
     identical to ts_acf — one fact aggregate onto the time-bounded day
     domain, then (days × K) work."""
-    daily = (
+    daily = pin(
         spark.table("orders")
         .groupBy(F.col("o_orderdate").alias("day"))
         .agg(
             F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long"))
             .cast("decimal(19,0)")
             .alias("rev")
-        )
-        .localCheckpoint(eager=False)
+        ),
+        "first_use",
     )
     gmom = daily.agg(
         F.count("*").cast("decimal(19,0)").alias("n"),
@@ -6314,18 +6273,8 @@ def stats_median_ci_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     f = spark.table("lineitem").select(
         F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long").alias("v")
     )
-    # Pinned (r14): dom feeds the prefix-sum ranking AND the n/rank
-    # aggregate — unpinned, the fact scan + price-grid groupBy ran
-    # twice (the ml_quantile_bins pc-pin rationale).
-    # r15 lazy-pin audit: examined, left lazy — per-stage event metrics
-    # show the consumers read the materialized blocks (cached-block
-    # reads count as task input bytes), not duplicate fact scans;
-    # eager measured CPU/wall-neutral and costs one extra job.
-    dom = (
-        f.groupBy("v")
-        .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint(eager=False)
-    )
+    # dom feeds the prefix-sum ranking AND the n/rank aggregate.
+    dom = pin(f.groupBy("v").agg(F.count("*").cast("long").alias("c")), "first_use")
     cum = attach_prefix_sums(dom, ["v"], ["c"]).select(
         "v", F.col("c_upto").alias("cc")
     )
@@ -6427,11 +6376,15 @@ def stats_tukey_hsd(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
     )
     c38 = F.col("c").cast("decimal(38,0)")
-    bygrp = v.groupBy("grp").agg(
-        F.count("*").cast("long").alias("n_g"),
-        F.sum(c38).alias("s_g"),
-        F.sum(c38 * F.col("c")).alias("q_g"),
-    ).localCheckpoint(eager=False)  # 5-row domain, consumed by pairs + carriers
+    # 5-row domain, consumed by pairs + carriers
+    bygrp = pin(
+        v.groupBy("grp").agg(
+            F.count("*").cast("long").alias("n_g"),
+            F.sum(c38).alias("s_g"),
+            F.sum(c38 * F.col("c")).alias("q_g"),
+        ),
+        "first_use",
+    )
     one = bygrp.agg(
         F.sum("n_g").cast("long").alias("n"),
         F.sum("s_g").alias("s"),
@@ -6891,11 +6844,12 @@ def ts_anomaly_seasonal_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("rev_c").alias("sd"), F.count("*").alias("nd")
     )
     tot = daily.agg(F.sum("rev_c").alias("st"), F.count("*").alias("nt"))
-    resid = (
+    # day-domain residuals, consumed by 3 passes
+    resid = pin(
         win.join(F.broadcast(dow_avg), "dow")
         .crossJoin(F.broadcast(tot))
-        .select("day", "rev_c", F.expr(_SRA_RESID).alias("r"))
-        .localCheckpoint(eager=False)  # day-domain residuals, consumed by 3 passes
+        .select("day", "rev_c", F.expr(_SRA_RESID).alias("r")),
+        "first_use",
     )
     n1 = resid.agg(
         F.expr("CAST((count(*) + 1) div 2 AS BIGINT)").alias("med_rank")

@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .num import davg_i, sql_davg_i
+from .pins import pin
 from .registry import query
 
 #: Stopword set for the ratio features (vocabulary-appropriate: the
@@ -392,22 +393,13 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shuffle until the per-doc stats agg. The DuckDB oracle runs the
     identical rightmost-min rule on an exploded grid, value-exact via
     the shared sha256-prefix gram hashes."""
-    return (
-        winnow_selected(spark)
-        .select(
-            "doc_id",
-            F.size("hs").cast("long").alias("n_grams"),
-            F.size("sel").cast("long").alias("n_selected"),
-            F.expr(
-                "array_min(transform(sel, p -> element_at(hs, p)))"
-            ).alias("min_fp"),
-        )
-        # pin-before-sort (r15): the range exchange's sampling pass
-        # recomputes its child, running the winnow selection twice;
-        # the pin makes the sampling job materialize it once
-        .localCheckpoint(eager=False)
-        .orderBy("doc_id")
+    stats = winnow_selected(spark).select(
+        "doc_id",
+        F.size("hs").cast("long").alias("n_grams"),
+        F.size("sel").cast("long").alias("n_selected"),
+        F.expr("array_min(transform(sel, p -> element_at(hs, p)))").alias("min_fp"),
     )
+    return pin(stats, "first_use").orderBy("doc_id")
 
 
 @query(

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from .num import davg, sql_davg, _round_ieee, _sql_round_ieee
+from .pins import pin
 from .registry import query
 
 TOP_K = 10
@@ -400,13 +401,15 @@ def semantic_pairs(v: DataFrame, threshold: float) -> DataFrame:
 def _semantic_clusters(spark: SparkSession, threshold: float) -> DataFrame:
     from .sampling import star_components
 
-    # Pinned (r14): semantic_pairs self-joins v — same double-scan
-    # rationale as embed_cosine_pairs above.
-    v = occupancy_blocked(
-        spark.table("embeddings")
-        .select("vec_id", "label", _as_double(F.col("embedding")).alias("vec"))
-        .withColumn("nrm", _norm(F.col("vec")))
-    ).localCheckpoint(eager=False)
+    # Pinned: semantic_pairs self-joins v.
+    v = pin(
+        occupancy_blocked(
+            spark.table("embeddings")
+            .select("vec_id", "label", _as_double(F.col("embedding")).alias("vec"))
+            .withColumn("nrm", _norm(F.col("vec")))
+        ),
+        "first_use",
+    )
     lab = star_components(semantic_pairs(v, threshold), "va", "vb").select(
         F.col("node").alias("vec_id"), F.col("component").alias("cluster_id")
     )
@@ -806,7 +809,7 @@ def vectors_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape per iteration: broadcast the d-sized component, one
     map pass computes scores, one (dim)-keyed map-side-combined
     aggregate re-projects — shuffle volume is d rows per iteration,
-    vectors never shuffle (the centered corpus is checkpointed once).
+    vectors never shuffle (the centered corpus is pinned once).
     Same physical pattern as Lloyd's k-means: state broadcast down,
     d-sized gradients combined up."""
     raw = spark.table("embeddings").select(
@@ -829,15 +832,13 @@ def vectors_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda r: r["m"],
         ).alias("mvec")
     )
-    centered = (
-        raw.crossJoin(F.broadcast(mu_arr))
-        .select(
+    # reused every iteration; vectors never shuffle
+    centered = pin(
+        raw.crossJoin(F.broadcast(mu_arr)).select(
             "vec_id",
             F.zip_with("vec", "mvec", lambda x, y: x - y).alias("cvec"),
-        )
-        # lazy (r14): reused every iteration; vectors never shuffle —
-        # eager=False folds the pin's job into the final action.
-        .localCheckpoint(eager=False)
+        ),
+        "first_use",
     )
     v = spark.range(1).select(
         F.transform(F.sequence(F.lit(0), F.lit(63)), lambda _: F.lit(0.125)).alias(
@@ -855,7 +856,9 @@ def vectors_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda acc, x: acc + x,
             ).alias("s"),
         )
-        w = (
+        # Pinned per iteration: the n2 norm and the v update both read
+        # w, a pass over the VECTOR-sized centered table.
+        w = pin(
             s.select(F.posexplode("cvec").alias("dim", "xd"), "s")
             .groupBy("dim")
             .agg(
@@ -864,13 +867,8 @@ def vectors_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .cast("double")
                 .alias("wd")
-            )
-            # Pin per iteration (r14): w is consumed twice (the n2
-            # norm and the v update), and each w holds a full pass
-            # over the VECTOR-sized centered table — unpinned, that
-            # pass doubled per iteration. d-row state; lazy, so it
-            # materializes inside the one final job.
-            .localCheckpoint(eager=False)
+            ),
+            "first_use",
         )
         n2 = w.agg(
             F.sum(
@@ -994,16 +992,13 @@ def vectors_abtt_postprocess(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda r: r["m"],
         ).alias("mvec")
     )
-    centered = (
-        raw.crossJoin(F.broadcast(mu_arr))
-        .select(
+    centered = pin(
+        raw.crossJoin(F.broadcast(mu_arr)).select(
             "vec_id",
             "label",
             F.zip_with("vec", "mvec", lambda x, y: x - y).alias("cvec"),
-        )
-        # lazy (r14): the eager pin was one extra job submission; the
-        # final action materializes it at first touch instead.
-        .localCheckpoint(eager=False)
+        ),
+        "first_use",
     )
     v = spark.range(1).select(
         F.transform(
@@ -1019,7 +1014,9 @@ def vectors_abtt_postprocess(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda acc, x: acc + x,
             ).alias("s"),
         )
-        w = (
+        # Pinned per iteration: the n2 norm and the v update both read
+        # w, a pass over the VECTOR-sized centered table.
+        w = pin(
             s.select(F.posexplode("cvec").alias("dim", "xd"), "s")
             .groupBy("dim")
             .agg(
@@ -1028,13 +1025,8 @@ def vectors_abtt_postprocess(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .cast("double")
                 .alias("wd")
-            )
-            # Pin per iteration (r14): w is consumed twice (the n2
-            # norm and the v update), and each w holds a full pass
-            # over the VECTOR-sized centered table — unpinned, that
-            # pass doubled per iteration. d-row state; lazy, so it
-            # materializes inside the one final job.
-            .localCheckpoint(eager=False)
+            ),
+            "first_use",
         )
         n2 = w.agg(
             F.sum(
@@ -1151,11 +1143,13 @@ def _pq_topk(spark: SparkSession, k: int) -> DataFrame:
     init), with assignment as a broadcast join against the
     {PQ_M}×{PQ_K}-row codebook and centroid recompute as a
     per-dimension aggregate — the codebook relation never exceeds 128
-    rows and is localCheckpoint-pinned per iteration (the PageRank/PCA
+    rows and is pinned per iteration (the PageRank/PCA
     loop idiom). ADC joins the exploded code stream against the
     broadcast per-query lookup table and partial-aggregates map-side,
     so the only shuffle carries (q_id, vec_id, partial-sum) rows."""
-    v = (
+    # Pin the parsed corpus: v feeds the subvector slicing, the query
+    # set AND the rerank join.
+    v = pin(
         spark.table("embeddings")
         # embedding IS NOT NULL: a failed-embed row has no position in
         # vector space, and a NULL ADC distance would rank FIRST in
@@ -1164,35 +1158,33 @@ def _pq_topk(spark: SparkSession, k: int) -> DataFrame:
         # cosine-DESC ANN family is immune; r10 nulls corpus).
         .filter(F.col("embedding").isNotNull())
         .select("vec_id", _as_double(F.col("embedding")).alias("vec"))
-        .withColumn("nrm", _norm(F.col("vec")))
-        # Pin the parsed corpus (r14): v feeds the subvector slicing,
-        # the query set AND the rerank join — unpinned, the parquet
-        # scan + array-double parse + norm ran three times (3 scans in
-        # the before-plan). Same corpus-sized pin class as `sub` just
-        # below, which this pipeline already holds.
-        .localCheckpoint(eager=False)
+        .withColumn("nrm", _norm(F.col("vec"))),
+        "first_use",
     )
     # (vec_id, m, subvec): the m-th contiguous 8-dim slice of each vector.
-    sub = v.select(
-        "vec_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(PQ_M - 1)),
-                lambda m: F.slice(F.col("vec"), m * PQ_SUBDIM + 1, PQ_SUBDIM),
-            )
-        ).alias("m", "subvec"),
-    ).localCheckpoint(eager=False)
+    sub = pin(
+        v.select(
+            "vec_id",
+            F.posexplode(
+                F.transform(
+                    F.sequence(F.lit(0), F.lit(PQ_M - 1)),
+                    lambda m: F.slice(F.col("vec"), m * PQ_SUBDIM + 1, PQ_SUBDIM),
+                )
+            ).alias("m", "subvec"),
+        ),
+        "first_use",
+    )
 
     # Deterministic seeded init: per subspace, the K lowest-hash vectors
     # donate their subvectors as starting centroids.
     rn = F.row_number().over(
         W.partitionBy("m").orderBy(F.xxhash64(F.lit(71), "vec_id"), "vec_id")
     )
-    cents = (
+    cents = pin(
         sub.withColumn("rn", rn)
         .filter(F.col("rn") <= k)
-        .select("m", (F.col("rn") - 1).alias("cid"), F.col("subvec").alias("cvec"))
-        .localCheckpoint(eager=False)
+        .select("m", (F.col("rn") - 1).alias("cid"), F.col("subvec").alias("cvec")),
+        "first_use",
     )
     for _ in range(PQ_LLOYD_ITERS):
         assign = (
@@ -1206,7 +1198,7 @@ def _pq_topk(spark: SparkSession, k: int) -> DataFrame:
             )
             .filter(F.col("arn") == 1)
         )
-        cents = (
+        cents = pin(
             assign.select("m", "cid", F.posexplode("subvec").alias("dim", "val"))
             .groupBy("m", "cid", "dim")
             .agg(F.avg("val").alias("cval"))
@@ -1220,8 +1212,8 @@ def _pq_topk(spark: SparkSession, k: int) -> DataFrame:
                 F.transform(F.col("pairs"), lambda s: s.getField("cval")).alias(
                     "cvec"
                 ),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            "first_use",
         )
     # Final encoding: nearest centroid per (vector, subspace).
     codes = (

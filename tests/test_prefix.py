@@ -37,10 +37,10 @@ def test_prefix_sums_spread_across_partitions(spark):
     df = spark.range(10_000).select(
         F.col("id").alias("k"), F.lit(1).alias("v")
     )
-    # checkpoint=False: the production path eagerly checkpoints the
-    # range-partitioned domain (so the exchange executes before the
-    # final plan is rendered); disabling it here keeps the range
-    # exchange visible for the shape assertion.
+    # checkpoint=False: the production path pins the range-partitioned
+    # domain (so the plan shows the pinned scan, not the exchange);
+    # disabling it here keeps the range exchange visible for the shape
+    # assertion.
     out = attach_prefix_sums(df, ["k"], ["v"], n_parts=8, checkpoint=False)
     plan = physical_plan(out)
     assert unpartitioned_window_count(out) == 0, plan
